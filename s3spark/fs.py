@@ -13,12 +13,15 @@ control surface (SURVEY.md §2.1):
 - move (copy+delete, R19 move_file.py:125-154)
 - remove (R20 remove_files.py:96-116)
 
-Design (SURVEY.md §3.2): the *matched-file set* is computed as a
-DataFrame (distributed listing via the ``binaryFile`` source when the
-prefix is huge; driver-side ``FileSystem.listFiles`` for metadata-only
-listings), while the verbs themselves are Hadoop FileSystem calls —
-metadata/byte operations, path-scheme agnostic, so ``file://`` in tests
-and ``s3a://`` in production traverse identical code.
+Design (SURVEY.md §3.2): a verb's *matched-file set* is computed on
+the driver like the reference computes it — a plain list of paths
+(``os.walk`` for local prefixes, the Hadoop ``RemoteIterator``
+otherwise) filtered with Python ``re.search``, with no Spark job.  Only
+a prefix past ``DRIVER_LISTING_THRESHOLD`` entries is listed and
+matched as a DataFrame (the ``binaryFile`` source, Java regex).  The
+verbs themselves are Hadoop FileSystem calls — metadata/byte
+operations, path-scheme agnostic, so ``file://`` in tests and
+``s3a://`` in production traverse identical code.
 
 Deliberate divergences from reference bugs (SURVEY.md §8): full
 pagination always (D1/D2 — Hadoop's RemoteIterator pages internally),
@@ -28,9 +31,13 @@ only when >1 match (D4), files-only listings (D5).
 
 from __future__ import annotations
 
+import os
 import re
+from collections.abc import Iterable
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -94,7 +101,8 @@ def _jvm_fs(spark: SparkSession, url: str):
     """
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    uri = jvm.java.net.URI.create(url)
+    # Path, not URI.create: a key with a space is a legal object name
+    uri = _jpath(spark, url).toUri()
     try:
         fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
     except Exception as e:  # Py4JJavaError carries the JVM message
@@ -135,66 +143,74 @@ def list_paths(
     url: str,
     suffix: str | None = None,
     recursive: bool = True,
-) -> list[str]:
-    """Driver-side list of file paths under a prefix via the Hadoop
-    FileSystem — the scheme-agnostic metadata walk (file://, s3a://,
-    ...) for callers that need a plain Python list (manifest diffs,
-    commit-file enumeration), not a DataFrame.
+    threshold: int | None = None,
+) -> list[str] | None:
+    """Driver-side list of file paths under a prefix — the scheme-
+    agnostic metadata walk (file://, s3a://, ...) for callers that need
+    a plain Python list (verb matching, manifest diffs, commit-file
+    enumeration), not a DataFrame.
 
-    Replaces ad-hoc ``os.walk`` in query paths (round-12 ADVICE:
-    a local-only walk silently returns nothing on remote scratch).
     ``suffix`` filters by file-name suffix (e.g. ``".parquet"``).
     Raises :class:`S3FileNotFound` on a missing prefix, like
-    :func:`list_files`.  Driver-side by design: commit manifests are
-    bounded metadata (one entry per committed file), never corpus-
-    sized — huge prefixes belong on :func:`list_files_auto`.
+    :func:`list_files`.  Paths are rendered as Hadoop's
+    ``Path.toString()`` renders them (``file:/abs/path``,
+    ``s3a://bucket/key``) and ChecksumFileSystem's ``.<name>.crc``
+    sidecars are hidden, so both routes below list the same strings.
 
     Local prefixes (no scheme, or ``file:``) take an os.walk fast
     path: the Hadoop RemoteIterator costs one py4j round-trip per
-    entry (measured 0.62x on the manifest-diff key — ~1 s of JVM
-    chatter to list ~90 files), which is pure overhead when the
-    driver can stat the directory directly.  Any other scheme goes
-    through the Hadoop FileSystem, so s3a:// scratch lists correctly
-    instead of silently returning nothing.
+    entry (~4-6 ms), which is pure overhead when the driver can stat
+    the directory directly.  Any other scheme goes through the Hadoop
+    FileSystem, so s3a:// lists correctly instead of silently
+    returning nothing.
+
+    With ``threshold``, the walk stops as soon as it passes that many
+    entries and returns ``None``: a prefix that large must be listed by
+    executor tasks (:func:`list_files_distributed`), never serialized
+    through one driver loop.  The abandoned probe is bounded by
+    ``threshold`` entries (~10 S3 LIST pages at 10 000), independent of
+    prefix size.
     """
-    import os as _os
-    from urllib.parse import urlparse
-
-    scheme = urlparse(url).scheme
-    if scheme in ("", "file"):
-        root = url[len("file://"):] if url.startswith("file://") else (
-            url[len("file:"):] if url.startswith("file:") else url
-        )
-        if not _os.path.exists(root):
+    if urlparse(url).scheme in ("", "file"):
+        root = os.path.abspath(re.sub(r"^file:(//)?", "", url))
+        if not os.path.exists(root):
             raise S3FileNotFound(f"no such path: {url}")
-        out_local: list[str] = []
-        if recursive:
-            for dirpath, _dirs, files in _os.walk(root):
-                out_local.extend(
-                    _os.path.join(dirpath, f)
-                    for f in files
-                    if suffix is None or f.endswith(suffix)
-                )
-        else:
-            out_local.extend(
-                _os.path.join(root, f)
-                for f in _os.listdir(root)
-                if _os.path.isfile(_os.path.join(root, f))
-                and (suffix is None or f.endswith(suffix))
-            )
-        return out_local
-
-    fs = _jvm_fs(spark, url)
-    path = _jpath(spark, url)
-    if not fs.exists(path):
-        raise S3FileNotFound(f"no such path: {url}")
+        entries = _walk_local(root, recursive)
+    else:
+        fs = _jvm_fs(spark, url)
+        path = _jpath(spark, url)
+        if not fs.exists(path):
+            raise S3FileNotFound(f"no such path: {url}")
+        it = fs.listFiles(path, recursive)
+        entries = (it.next().getPath().toString() for _ in iter(it.hasNext, False))
     out: list[str] = []
-    it = fs.listFiles(path, recursive)
-    while it.hasNext():
-        p = it.next().getPath().toString()
+    for n, p in enumerate(entries, start=1):
+        if threshold is not None and n > threshold:
+            return None
         if suffix is None or p.endswith(suffix):
             out.append(p)
     return out
+
+
+def _is_checksum(name: str) -> bool:
+    """ChecksumFileSystem.isChecksumFile: ``.<name>.crc`` sidecars."""
+    return name.startswith(".") and name.endswith(".crc")
+
+
+def _walk_local(root: str, recursive: bool):
+    """Files under a local path as LocalFileSystem.listFiles yields them:
+    a file root lists itself, symlinked directories are followed, and
+    checksum entries (files or directories) are skipped."""
+    if not os.path.isdir(root):
+        yield f"file:{root}"
+        return
+    for dirpath, dirs, files in os.walk(root, followlinks=True):
+        dirs[:] = [d for d in dirs if not _is_checksum(d)]
+        for f in files:
+            if not _is_checksum(f):
+                yield f"file:{os.path.join(dirpath, f)}"
+        if not recursive:
+            return
 
 
 def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFrame:
@@ -233,53 +249,11 @@ def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFra
     return spark.createDataFrame(rows, LISTING_SCHEMA)
 
 
-# Above this many entries the driver-side RemoteIterator walk is
-# abandoned mid-stream and the listing re-issued as a distributed scan
-# (a 100M-object prefix must never serialize through one Python loop —
-# the failure mode the reference's own pagination bug foreshadowed).
+# Above this many entries a verb's source listing leaves the driver: the
+# walk is abandoned mid-stream and re-issued as a distributed scan (a
+# 100M-object prefix must never serialize through one Python loop — the
+# failure mode the reference's own pagination bug foreshadowed).
 DRIVER_LISTING_THRESHOLD = 10_000
-
-
-def list_files_auto(
-    spark: SparkSession,
-    url: str,
-    threshold: int = DRIVER_LISTING_THRESHOLD,
-    recursive: bool = True,
-) -> DataFrame:
-    """Listing DataFrame with automatic driver/distributed routing.
-
-    Walks the driver-side iterator (cheap, no job) until ``threshold``
-    entries, then cuts over to :func:`list_files_distributed` so huge
-    prefixes are listed by executor tasks instead of a driver loop.
-    The abandoned probe work is bounded by ``threshold`` entries (~10
-    S3 LIST pages at the default), independent of prefix size — the
-    distributed listing pays the full cost exactly once.  ``recursive``
-    mirrors :func:`list_files` and is honored on both routes.
-    """
-    import datetime
-
-    fs = _jvm_fs(spark, url)
-    path = _jpath(spark, url)
-    if not fs.exists(path):
-        raise S3FileNotFound(f"no such path: {url}")
-    rows = []
-    it = fs.listFiles(path, recursive)
-    while it.hasNext():
-        if len(rows) >= threshold:
-            return list_files_distributed(spark, url, recursive=recursive)
-        st = it.next()
-        p = st.getPath().toString()
-        rows.append(
-            (
-                p,
-                naming.basename(p),
-                st.getLen(),
-                datetime.datetime.fromtimestamp(
-                    st.getModificationTime() / 1000.0, tz=datetime.timezone.utc
-                ),
-            )
-        )
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
 
 
 def list_files_distributed(
@@ -307,6 +281,12 @@ def list_files_distributed(
 # ------------------------------------------------------------------ matching
 
 
+# scheme://authority/rest → rest (S3A, hdfs, ...), then
+# scheme:/rest (no authority; Hadoop renders file:/tmp/x) → /rest
+_AUTHORITY_PREFIX = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*/"
+_SCHEME_PREFIX = r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(?=/)"
+
+
 def col_key_relative(path):
     """Store-relative text of a listing URL — what the reference's regex
     actually sees: the bucket-relative key on S3 (download_file.py:226
@@ -316,10 +296,48 @@ def col_key_relative(path):
     ``file:/tmp/x`` → ``/tmp/x``. Keeps scheme/bucket text out of the
     match so anchored patterns (``^data/``) and bucket-name overlaps
     behave exactly like the reference."""
-    # scheme://authority/rest  →  rest   (S3A, hdfs, ...)
-    rel = F.regexp_replace(path, r"^[a-zA-Z][a-zA-Z0-9+.\-]*://[^/]*/", "")
-    # scheme:/rest (no authority; Hadoop renders file:/tmp/x)  →  /rest
-    return F.regexp_replace(rel, r"^[a-zA-Z][a-zA-Z0-9+.\-]*:(?=/)", "")
+    rel = F.regexp_replace(path, _AUTHORITY_PREFIX, "")
+    return F.regexp_replace(rel, _SCHEME_PREFIX, "")
+
+
+def _key_relative(path: str) -> str:
+    """:func:`col_key_relative` for one path string on the driver."""
+    return re.sub(_SCHEME_PREFIX, "", re.sub(_AUTHORITY_PREFIX, "", path))
+
+
+def _compile(pattern: str) -> re.Pattern:
+    try:
+        return re.compile(pattern)
+    except re.error as e:
+        raise S3InvalidRegex(f"invalid regex {pattern!r}: {e}") from e
+
+
+def _check_regex(spark: SparkSession, pattern: str) -> None:
+    """Refuse, as a typed 203, a pattern that Python or Java rejects.
+
+    Executor-side ``rlike`` matches with java.util.regex, which rejects
+    some Python syntax (``(?P<name>...)``, ``(?P=name)``); compiling it
+    on the driver first makes such a pattern fail before any job runs,
+    never as a raw Py4JJavaError from a task."""
+    _compile(pattern)
+    try:
+        spark._jvm.java.util.regex.Pattern.compile(pattern)
+    except IllegalArgumentException as e:  # PatternSyntaxException
+        raise S3InvalidRegex(
+            f"regex {pattern!r} is not valid Java regex, which matching "
+            f"uses past {DRIVER_LISTING_THRESHOLD} entries: "
+            f"{str(e).splitlines()[0]}"
+        ) from e
+
+
+def match_paths(paths: Iterable[str], pattern: str) -> list[str]:
+    """The reference's regex match (R9/R10) over plain path strings:
+    ``re.search`` over each path's store-relative key
+    (:func:`_key_relative`), exactly download_file.py:220-229. Returns
+    the matched paths sorted. Raises :class:`S3InvalidRegex` (203) on a
+    bad pattern."""
+    search = _compile(pattern).search
+    return sorted(p for p in paths if search(_key_relative(p)))
 
 
 def match_files(
@@ -327,19 +345,17 @@ def match_files(
     pattern: str,
     match_type: str = REGEX_MATCH,
 ) -> DataFrame:
-    """Filter a listing like the reference matches keys (R9/R10).
+    """Filter a listing DataFrame like the reference matches keys (R9/R10).
 
-    ``regex_match`` is an unanchored ``re.search`` (→ ``rlike``) over
+    ``regex_match`` is an unanchored search (``rlike``, Java regex) over
     the store-relative key text (download_file.py:226 sees the
     bucket-relative key; upload_file.py:191 the absolute local path —
     see :func:`col_key_relative`); ``exact_match`` compares the
-    full path. Raises :class:`S3InvalidRegex` (203) on a bad pattern.
+    full path. Raises :class:`S3InvalidRegex` (203) on a pattern that
+    Python or Java rejects.
     """
     if match_type == REGEX_MATCH:
-        try:
-            re.compile(pattern)
-        except re.error as e:
-            raise S3InvalidRegex(f"invalid regex {pattern!r}: {e}") from e
+        _check_regex(listing.sparkSession, pattern)
         return listing.filter(col_key_relative(F.col("path")).rlike(pattern))
     # exact match: Hadoop renders URIs with a scheme (file:/x, s3a://b/k);
     # accept the raw path too so callers can pass plain absolute paths
@@ -358,12 +374,16 @@ def _collect_matches(
     source_file: str,
     match_type: str,
 ) -> list[str]:
-    """List + match + collect source paths (driver-side planning step).
+    """Sorted source paths of a verb (its driver-side planning step).
 
-    The collect() here is a metadata operation over matched *paths*
-    (bounded by match count), never data rows. Listing routes through
-    :func:`list_files_auto`: small prefixes stay on the driver, huge
-    ones are listed by a distributed scan.
+    A regex match lists the prefix on the driver (:func:`list_paths`)
+    and filters it with Python ``re.search`` (:func:`match_paths`), the
+    reference's exact semantics, with no Spark job.  Past
+    :data:`DRIVER_LISTING_THRESHOLD` entries the listing cuts over to a
+    distributed scan matched with Java regex (``rlike``); a pattern Java
+    rejects is refused with a typed 203 before any job runs.  The
+    collect() there is over matched *paths* (bounded by match count),
+    never data rows.
     """
     folder = naming.clean_folder_name(source_folder)
     base = f"{source_url.rstrip('/')}/{folder}" if folder else source_url.rstrip("/")
@@ -373,9 +393,14 @@ def _collect_matches(
         if not fs.exists(_jpath(spark, full)):
             raise S3FileNotFound(f"no such file: {full}")
         return [full]
-    listing = list_files_auto(spark, base)
-    matched = match_files(listing, source_file, REGEX_MATCH)
-    paths = [r.path for r in matched.select("path").orderBy("path").collect()]
+    listed = list_paths(spark, base, threshold=DRIVER_LISTING_THRESHOLD)
+    if listed is not None:
+        paths = match_paths(listed, source_file)
+    else:
+        # before list_files_distributed: a wide tree is listed by a job
+        _check_regex(spark, source_file)
+        matched = match_files(list_files_distributed(spark, base), source_file)
+        paths = sorted(r.path for r in matched.select("path").collect())
     if not paths:
         raise S3NoMatches(
             f"no files matching {source_file!r} under {base} "
@@ -420,17 +445,33 @@ class VerbResult:
         return len(self.files)
 
 
-def _copy(spark: SparkSession, src: str, dst: str, delete_source: bool) -> None:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    sp, dp = _jpath(spark, src), _jpath(spark, dst)
-    sfs, dfs = _jvm_fs(spark, src), _jvm_fs(spark, dst)
-    parent = dp.getParent()
-    if parent is not None and not dfs.exists(parent):
-        dfs.mkdirs(parent)  # reference makedirs, download_file.py:261-263
-    ok = jvm.org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dfs, dp, delete_source, True, conf)
-    if not ok:
+def _copy(file_util, sfs, src, dfs, dst, delete_source: bool, conf) -> None:
+    """One byte copy (``FileUtil.copy``) between resolved handles and paths."""
+    if not file_util.copy(sfs, src, dfs, dst, delete_source, True, conf):
         raise S3FileNotFound(f"copy failed: {src} -> {dst}")
+
+
+def _transfer(spark: SparkSession, pairs: list[tuple[str, str]], delete_source: bool) -> None:
+    """Copy every (source, destination) pair, deleting each source after
+    its copy when ``delete_source``.  All sources sit under one listed
+    prefix and all destinations under one destination prefix, so each
+    side's FileSystem handle is resolved once per verb, and each
+    distinct destination parent is checked (and created) once.  The
+    Hadoop classes are looked up once too: py4j resolves every segment
+    of ``jvm.org.apache.hadoop.fs.Path`` with its own JVM round trip."""
+    sfs, dfs = _jvm_fs(spark, pairs[0][0]), _jvm_fs(spark, pairs[0][1])
+    conf = spark._jsc.hadoopConfiguration()
+    hadoop = spark._jvm.org.apache.hadoop.fs
+    Path, FileUtil = hadoop.Path, hadoop.FileUtil
+    parents = set()
+    for src, dst in pairs:
+        parent = dst.rsplit("/", 1)[0]
+        if parent not in parents:
+            parents.add(parent)
+            jparent = Path(parent)
+            if not dfs.exists(jparent):
+                dfs.mkdirs(jparent)  # reference makedirs, download_file.py:261-263
+        _copy(FileUtil, sfs, Path(src), dfs, Path(dst), delete_source, conf)
 
 
 def ingest(
@@ -447,9 +488,8 @@ def ingest(
     """≈ reference download (R17): remote → local byte copy per match."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
     pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    for src, dst in pairs:
-        _copy(spark, src, dst, delete_source=False)
-    return VerbResult(files=list(pairs))
+    _transfer(spark, pairs, delete_source=False)
+    return VerbResult(files=pairs)
 
 
 def publish(
@@ -492,9 +532,8 @@ def move(
     non-atomic exactly like S3 COPY+DELETE (move_file.py:125-154)."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
     pairs = _plan_destinations(paths, dest_url, dest_folder, dest_file)
-    for src, dst in pairs:
-        _copy(spark, src, dst, delete_source=True)
-    return VerbResult(files=list(pairs))
+    _transfer(spark, pairs, delete_source=True)
+    return VerbResult(files=pairs)
 
 
 def remove(
@@ -508,7 +547,8 @@ def remove(
     """≈ reference remove (R20): delete per match. Exact-match remove
     verifies existence first (divergence D7 → typed 201)."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
+    fs = _jvm_fs(spark, paths[0])  # all matches share one prefix
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     for p in paths:
-        fs = _jvm_fs(spark, p)
-        fs.delete(_jpath(spark, p), False)
+        fs.delete(Path(p), False)
     return VerbResult(files=[(p, None) for p in paths])

@@ -11,6 +11,8 @@ duplicate basenames in different folders.
 from __future__ import annotations
 
 import os
+import re
+import uuid
 
 import pytest
 
@@ -250,24 +252,193 @@ def test_pagination_regression_1500_files(spark, tmp_path):
     assert fs.list_files_distributed(spark, url(d)).count() == 1500
 
 
-def test_listing_auto_routes_to_distributed_past_threshold(spark, tmp_path):
-    """_collect_matches' listing switches off the driver loop for big
-    prefixes: past the threshold the plan must be a distributed
-    binaryFile scan, below it a driver-materialized local table."""
+def _jobs_run_by(spark, fn):
+    """(fn(), number of Spark jobs fn started), via a job group."""
+    sc = spark.sparkContext
+    group = f"test-fs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_listing_auto_routes_to_distributed_past_threshold(
+    spark, tmp_path, monkeypatch
+):
+    """_collect_matches lists on the driver up to
+    DRIVER_LISTING_THRESHOLD entries (no Spark job) and cuts over to a
+    distributed binaryFile scan as soon as the listing passes it; both
+    routes return the same sorted paths."""
     d = tmp_path / "many"
     d.mkdir()
-    for i in range(1500):
-        (d / f"f{i:04d}.dat").write_text("x")
+    for i in range(40):
+        (d / f"f{i:02d}.dat").write_text("x")
+    scans = []
+    real_scan = fs.list_files_distributed
+    monkeypatch.setattr(
+        fs,
+        "list_files_distributed",
+        lambda *a, **k: scans.append(a) or real_scan(*a, **k),
+    )
 
-    small = fs.list_files_auto(spark, url(d))  # default threshold 10k
-    assert "Scan ExistingRDD" in small._jdf.queryExecution().executedPlan().toString() or \
-        "LocalTableScan" in small._jdf.queryExecution().executedPlan().toString()
-    assert small.count() == 1500
+    def collect():
+        return fs._collect_matches(spark, url(d), "", r"f[12]\d\.dat$", fs.REGEX_MATCH)
 
-    big = fs.list_files_auto(spark, url(d), threshold=1000)
-    plan = big._jdf.queryExecution().executedPlan().toString()
-    assert "binaryFile" in plan
-    assert big.count() == 1500
+    monkeypatch.setattr(fs, "DRIVER_LISTING_THRESHOLD", 40)  # 40 entries: driver
+    driver, jobs = _jobs_run_by(spark, collect)
+    assert (jobs, scans) == (0, [])
+    assert driver == [f"file:{d}/f{i}.dat" for i in range(10, 30)]
+
+    monkeypatch.setattr(fs, "DRIVER_LISTING_THRESHOLD", 39)
+    distributed, jobs = _jobs_run_by(spark, collect)
+    assert jobs > 0 and len(scans) == 1
+    assert distributed == driver
+
+
+def test_python_only_regex_is_typed_203_on_distributed_route(
+    spark, bucket, monkeypatch
+):
+    """Java regex rejects (?P<name>...): past the threshold such a
+    pattern is refused as S3InvalidRegex (203) before any job runs,
+    never as a raw Py4JJavaError; below it, it is plain re.search."""
+    rx = r"(?P<a>data_a)\.csv$"
+
+    def collect():
+        return fs._collect_matches(spark, url(bucket), "src", rx, fs.REGEX_MATCH)
+
+    assert collect() == [
+        f"file:{bucket}/src/a/data_a.csv",
+        f"file:{bucket}/src/data_a.csv",
+    ]
+    monkeypatch.setattr(fs, "DRIVER_LISTING_THRESHOLD", 1)
+    err, jobs = _jobs_run_by(spark, lambda: pytest.raises(S3InvalidRegex, collect))
+    assert (err.value.exit_code, jobs) == (203, 0)
+    listing = fs.list_files(spark, url(bucket / "src"))
+    with pytest.raises(S3InvalidRegex):
+        fs.match_files(listing, rx)
+
+
+# Python-only syntax the reference's re.search accepts, plus the
+# key-relative cases (anchors, bucket-name overlap).
+PATTERN_CORPUS = [
+    r"(?P<a>app)\.\d+\.log$",
+    r"(?P<x>[a-z])(?P=x)\.txt$",
+    r"(?<=/data/)\w+\.csv$",
+    r"^data/",
+    r"prod-data",
+    r"\.csv$",
+    r"[.]",
+]
+
+
+def test_driver_route_matches_equal_re_search(spark, tmp_path):
+    """Driver-route matching is exactly re.search over the
+    store-relative key: on a local tree through _collect_matches, and
+    on s3a-style keys (bucket-relative, so ^data/ hits and the bucket
+    name prod-data never does) through match_paths."""
+    root = tmp_path / "corpus"
+    for rel in (
+        "logs/app.1.log", "logs/app.22.log", "logs/app.log", "logs/xapp.3.log.gz",
+        "aa.txt", "ab.txt", "nested/bb.txt", "data/x.csv", "other/data/y.csv",
+        "prod-data/z.json",
+    ):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text("x")
+    local = [
+        os.path.join(dirpath, f) for dirpath, _, files in os.walk(root) for f in files
+    ]
+    s3a_keys = {
+        "s3a://prod-data-bucket/data/x.csv": "data/x.csv",
+        "s3a://prod-data-bucket/other/data/y.csv": "other/data/y.csv",
+        "s3a://prod-data-bucket/logs/app.7.log": "logs/app.7.log",
+        "s3a://prod-data-bucket/cc.txt": "cc.txt",
+        "s3a://b/prod-data/k.csv": "prod-data/k.csv",
+    }
+    hits = {}
+    for rx in PATTERN_CORPUS:
+        want = sorted(f"file:{p}" for p in local if re.search(rx, p))
+        try:
+            got = fs._collect_matches(spark, url(root), "", rx, fs.REGEX_MATCH)
+        except S3NoMatches:
+            got = []
+        assert got == want, rx
+        want_s3a = sorted(p for p, key in s3a_keys.items() if re.search(rx, key))
+        assert fs.match_paths(s3a_keys, rx) == want_s3a, rx
+        hits[rx] = (len(got), len(want_s3a))
+    assert hits[PATTERN_CORPUS[0]] == (2, 1)
+    assert hits[PATTERN_CORPUS[1]] == (2, 1)
+    assert hits[PATTERN_CORPUS[2]] == (2, 1)  # the key data/x.csv has no "/data/"
+    assert hits[r"^data/"] == (0, 1)
+    assert hits[r"prod-data"] == (1, 1)  # only the folder, never the bucket
+
+
+def test_regex_ingest_below_threshold_runs_no_spark_job(spark, bucket, tmp_path):
+    """Below the threshold a regex verb is driver listing, re.search and
+    FileSystem calls only: no Spark job."""
+    res, jobs = _jobs_run_by(
+        spark,
+        lambda: fs.ingest(
+            spark,
+            source_url=url(bucket),
+            source_folder="src",
+            source_file=r"\.csv$",
+            match_type=fs.REGEX_MATCH,
+            dest_url=url(tmp_path / "out"),
+            dest_file="merged.csv",
+        ),
+    )
+    assert res.count == 3
+    assert jobs == 0
+
+
+def test_verbs_resolve_one_fs_handle_per_side(spark, bucket, tmp_path, monkeypatch):
+    """A verb resolves the source and destination FileSystem handles
+    once, not once per file."""
+    calls = []
+    real = fs._jvm_fs
+    monkeypatch.setattr(fs, "_jvm_fs", lambda s, u: calls.append(u) or real(s, u))
+    res = fs.move(
+        spark,
+        source_url=url(bucket),
+        source_folder="src",
+        source_file=r"\.csv$",
+        match_type=fs.REGEX_MATCH,
+        dest_url=url(tmp_path / "bucket2"),
+        dest_folder="x/y",
+        dest_file="m.csv",
+    )
+    assert res.count == 3 and len(calls) == 2
+    calls.clear()
+    res = fs.remove(
+        spark,
+        source_url=url(tmp_path / "bucket2"),
+        source_file=r"m_\d\.csv$",
+        match_type=fs.REGEX_MATCH,
+    )
+    assert res.count == 3 and len(calls) == 1
+
+
+def test_verbs_copy_names_with_space_and_percent(spark, tmp_path):
+    """Object names may hold a space or a literal %20: the verbs copy
+    them under the same name (parsing the path as a URI would refuse
+    the space)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    (src / "x y%20z.csv").write_text("s")
+    res = fs.publish(
+        spark,
+        source_url=url(src),
+        source_file=r"\.csv$",
+        match_type=fs.REGEX_MATCH,
+        dest_url=url(tmp_path / "dst"),
+    )
+    assert res.files == [
+        (f"file:{src}/x y%20z.csv", f"file://{tmp_path}/dst/x y%20z.csv")
+    ]
+    assert (tmp_path / "dst" / "x y%20z.csv").read_text() == "s"
 
 
 def test_checksum_setter_credential_failure_maps_to_202():
@@ -340,3 +511,24 @@ def test_list_paths_missing_prefix_raises_201(spark, bucket):
     with pytest.raises(S3FileNotFound) as ei:
         fs.list_paths(spark, str(bucket / "nope"))
     assert ei.value.exit_code == 201
+
+
+def test_list_paths_fast_path_equals_hadoop_iterator(spark, tmp_path):
+    """The local os.walk fast path lists exactly what the Hadoop
+    RemoteIterator lists, rendered the same way: .crc
+    sidecars hidden like ChecksumFileSystem hides them; _SUCCESS,
+    dotfiles, nested files and names with a space or %20 kept."""
+    root = tmp_path / "tree"
+    for rel in (
+        "a.csv", ".a.csv.crc", "_SUCCESS", "._SUCCESS.crc", ".dotfile",
+        "nested/deep/q.json", "nested/x y%20z.txt", ".d.crc/hidden.txt",
+    ):
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text("x")
+    for recursive in (True, False):
+        it = fs._jvm_fs(spark, url(root)).listFiles(fs._jpath(spark, url(root)), recursive)
+        hadoop = sorted(it.next().getPath().toString() for _ in iter(it.hasNext, False))
+        assert sorted(fs.list_paths(spark, url(root), recursive=recursive)) == hadoop
+        assert sorted(fs.list_paths(spark, str(root), recursive=recursive)) == hadoop
+    assert {p.rsplit("/", 1)[1] for p in hadoop} == {"a.csv", "_SUCCESS", ".dotfile"}
+    assert f"file:{root}/nested/x y%20z.txt" in fs.list_paths(spark, url(root))
