@@ -15,13 +15,14 @@ control surface (SURVEY.md §2.1):
 
 Design (SURVEY.md §3.2): a verb's *matched-file set* is computed on
 the driver like the reference computes it — a plain list of paths
-(``os.walk`` for local prefixes, the Hadoop ``RemoteIterator``
-otherwise) filtered with Python ``re.search``, with no Spark job.  Only
-a prefix past ``DRIVER_LISTING_THRESHOLD`` entries is listed and
-matched as a DataFrame (the ``binaryFile`` source, Java regex).  The
-verbs themselves are Hadoop FileSystem calls — metadata/byte
-operations, path-scheme agnostic, so ``file://`` in tests and
-``s3a://`` in production traverse identical code.
+(:func:`list_files_auto`: ``os.walk`` for local prefixes, the Hadoop
+``RemoteIterator`` otherwise) filtered with Python ``re.search``, with
+no Spark job.  Only a prefix past ``DRIVER_LISTING_THRESHOLD`` entries
+is listed and matched as a DataFrame (the ``binaryFile`` source), with
+the same ``re.search`` run in a Python UDF.  The verbs themselves are
+Hadoop FileSystem calls — metadata/byte operations, path-scheme
+agnostic, so ``file://`` in tests and ``s3a://`` in production
+traverse identical code.
 
 Deliberate divergences from reference bugs (SURVEY.md §8): full
 pagination always (D1/D2 — Hadoop's RemoteIterator pages internally),
@@ -31,16 +32,18 @@ only when >1 match (D4), files-only listings (D5).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 from collections.abc import Iterable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from types import SimpleNamespace
 from urllib.parse import urlparse
 
-from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BooleanType,
     LongType,
     StringType,
     StructField,
@@ -99,12 +102,11 @@ def _jvm_fs(spark: SparkSession, url: str):
     bytes 1:1; LocalFileSystem's checksum files would pollute listings.
     Connection/auth failures surface as S3InvalidCredentials (202).
     """
-    jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     # Path, not URI.create: a key with a space is a legal object name
     uri = _jpath(spark, url).toUri()
     try:
-        fs = jvm.org.apache.hadoop.fs.FileSystem.get(uri, conf)
+        fs = _hadoop(spark._jvm).FileSystem.get(uri, conf)
     except Exception as e:  # Py4JJavaError carries the JVM message
         raise classify_fs_error(e) from e
     _disable_checksums(fs)
@@ -132,7 +134,16 @@ def _disable_checksums(fs) -> None:
 
 
 def _jpath(spark: SparkSession, url: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(url)
+    return _hadoop(spark._jvm).Path(url)
+
+
+@functools.cache
+def _hadoop(jvm) -> SimpleNamespace:
+    """The ``org.apache.hadoop.fs`` classes the verbs use, looked up once
+    per JVM view: py4j resolves every package segment of
+    ``jvm.org.apache.hadoop.fs.Path`` with its own JVM round trip."""
+    pkg = jvm.org.apache.hadoop.fs
+    return SimpleNamespace(FileSystem=pkg.FileSystem, Path=pkg.Path, FileUtil=pkg.FileUtil)
 
 
 # ------------------------------------------------------------------- listing
@@ -167,9 +178,9 @@ def list_paths(
     With ``threshold``, the walk stops as soon as it passes that many
     entries and returns ``None``: a prefix that large must be listed by
     executor tasks (:func:`list_files_distributed`), never serialized
-    through one driver loop.  The abandoned probe is bounded by
-    ``threshold`` entries (~10 S3 LIST pages at 10 000), independent of
-    prefix size.
+    through one driver loop.  The abandoned probe walks ``threshold``
+    entries whatever the prefix size; its cost at 10 000 entries on a
+    remote store has not been measured.
     """
     if urlparse(url).scheme in ("", "file"):
         root = os.path.abspath(re.sub(r"^file:(//)?", "", url))
@@ -213,6 +224,9 @@ def _walk_local(root: str, recursive: bool):
             return
 
 
+_LISTING_ROWS_PER_TASK = 4096
+
+
 def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFrame:
     """Listing DataFrame ``(path, name, size, mtime)`` for a prefix.
 
@@ -246,7 +260,12 @@ def list_files(spark: SparkSession, url: str, recursive: bool = True) -> DataFra
                 ),
             )
         )
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
+    # one task per _LISTING_ROWS_PER_TASK rows: the default split of a
+    # small listing (one slice per core) ran dozens of empty tasks, and
+    # a Python UDF worker for each, in every job over it
+    sc = spark.sparkContext
+    slices = min(sc.defaultParallelism, len(rows) // _LISTING_ROWS_PER_TASK + 1)
+    return spark.createDataFrame(sc.parallelize(rows, slices), LISTING_SCHEMA)
 
 
 # Above this many entries a verb's source listing leaves the driver: the
@@ -276,6 +295,28 @@ def list_files_distributed(
             F.col("modificationTime").alias("mtime"),
         )
     )
+
+
+def list_files_auto(
+    spark: SparkSession,
+    url: str,
+    threshold: int = DRIVER_LISTING_THRESHOLD,
+    recursive: bool = True,
+) -> list[tuple[str, str]] | DataFrame:
+    """A verb's source listing, routed by prefix size.
+
+    Up to ``threshold`` entries the prefix is listed on the driver by
+    :func:`list_paths` (no Spark job) and returned as ``(path, name)``
+    pairs, the leading columns of :data:`LISTING_SCHEMA`.  As soon as
+    the walk passes ``threshold`` it is abandoned and the prefix is
+    listed by executor tasks: the :func:`list_files_distributed`
+    DataFrame is returned instead.  ``recursive`` is honored on both
+    routes.
+    """
+    paths = list_paths(spark, url, recursive=recursive, threshold=threshold)
+    if paths is None:
+        return list_files_distributed(spark, url, recursive=recursive)
+    return [(p, naming.basename(p)) for p in paths]
 
 
 # ------------------------------------------------------------------ matching
@@ -312,24 +353,6 @@ def _compile(pattern: str) -> re.Pattern:
         raise S3InvalidRegex(f"invalid regex {pattern!r}: {e}") from e
 
 
-def _check_regex(spark: SparkSession, pattern: str) -> None:
-    """Refuse, as a typed 203, a pattern that Python or Java rejects.
-
-    Executor-side ``rlike`` matches with java.util.regex, which rejects
-    some Python syntax (``(?P<name>...)``, ``(?P=name)``); compiling it
-    on the driver first makes such a pattern fail before any job runs,
-    never as a raw Py4JJavaError from a task."""
-    _compile(pattern)
-    try:
-        spark._jvm.java.util.regex.Pattern.compile(pattern)
-    except IllegalArgumentException as e:  # PatternSyntaxException
-        raise S3InvalidRegex(
-            f"regex {pattern!r} is not valid Java regex, which matching "
-            f"uses past {DRIVER_LISTING_THRESHOLD} entries: "
-            f"{str(e).splitlines()[0]}"
-        ) from e
-
-
 def match_paths(paths: Iterable[str], pattern: str) -> list[str]:
     """The reference's regex match (R9/R10) over plain path strings:
     ``re.search`` over each path's store-relative key
@@ -347,16 +370,21 @@ def match_files(
 ) -> DataFrame:
     """Filter a listing DataFrame like the reference matches keys (R9/R10).
 
-    ``regex_match`` is an unanchored search (``rlike``, Java regex) over
-    the store-relative key text (download_file.py:226 sees the
+    ``regex_match`` is the reference's Python ``re.search`` over the
+    store-relative key text (download_file.py:226 sees the
     bucket-relative key; upload_file.py:191 the absolute local path —
-    see :func:`col_key_relative`); ``exact_match`` compares the
-    full path. Raises :class:`S3InvalidRegex` (203) on a pattern that
-    Python or Java rejects.
+    see :func:`col_key_relative`), run by executors in a Python UDF so
+    it matches exactly what :func:`match_paths` matches on the driver.
+    Java regex (``rlike``) would differ: it has no ``(?P<name>...)``
+    and its ``\\w`` is ASCII-only.  The UDF closes over the compiled pattern only, so
+    executors need no ``s3spark`` import.  ``exact_match`` compares the
+    full path. Raises :class:`S3InvalidRegex` (203) on a bad pattern,
+    on the driver, before any job runs.
     """
     if match_type == REGEX_MATCH:
-        _check_regex(listing.sparkSession, pattern)
-        return listing.filter(col_key_relative(F.col("path")).rlike(pattern))
+        rx = _compile(pattern)
+        hit = F.udf(lambda key: rx.search(key) is not None, BooleanType())
+        return listing.filter(hit(col_key_relative(F.col("path"))))
     # exact match: Hadoop renders URIs with a scheme (file:/x, s3a://b/k);
     # accept the raw path too so callers can pass plain absolute paths
     stripped = F.regexp_replace(
@@ -376,14 +404,14 @@ def _collect_matches(
 ) -> list[str]:
     """Sorted source paths of a verb (its driver-side planning step).
 
-    A regex match lists the prefix on the driver (:func:`list_paths`)
-    and filters it with Python ``re.search`` (:func:`match_paths`), the
-    reference's exact semantics, with no Spark job.  Past
-    :data:`DRIVER_LISTING_THRESHOLD` entries the listing cuts over to a
-    distributed scan matched with Java regex (``rlike``); a pattern Java
-    rejects is refused with a typed 203 before any job runs.  The
+    A regex match lists the prefix with :func:`list_files_auto`.  On
+    the driver route it filters the listed paths with Python
+    ``re.search`` (:func:`match_paths`), the reference's exact
+    semantics, with no Spark job.  Past :data:`DRIVER_LISTING_THRESHOLD`
+    entries the listing is a distributed scan, filtered by
+    :func:`match_files` with the same ``re.search`` in a UDF; the
     collect() there is over matched *paths* (bounded by match count),
-    never data rows.
+    never data rows.  Both routes return the matches sorted.
     """
     folder = naming.clean_folder_name(source_folder)
     base = f"{source_url.rstrip('/')}/{folder}" if folder else source_url.rstrip("/")
@@ -393,14 +421,12 @@ def _collect_matches(
         if not fs.exists(_jpath(spark, full)):
             raise S3FileNotFound(f"no such file: {full}")
         return [full]
-    listed = list_paths(spark, base, threshold=DRIVER_LISTING_THRESHOLD)
-    if listed is not None:
-        paths = match_paths(listed, source_file)
+    listing = list_files_auto(spark, base, threshold=DRIVER_LISTING_THRESHOLD)
+    if isinstance(listing, DataFrame):
+        matched = match_files(listing, source_file).select("path").collect()
+        paths = sorted(r.path for r in matched)
     else:
-        # before list_files_distributed: a wide tree is listed by a job
-        _check_regex(spark, source_file)
-        matched = match_files(list_files_distributed(spark, base), source_file)
-        paths = sorted(r.path for r in matched.select("path").collect())
+        paths = match_paths((p for p, _ in listing), source_file)
     if not paths:
         raise S3NoMatches(
             f"no files matching {source_file!r} under {base} "
@@ -445,33 +471,46 @@ class VerbResult:
         return len(self.files)
 
 
-def _copy(file_util, sfs, src, dfs, dst, delete_source: bool, conf) -> None:
-    """One byte copy (``FileUtil.copy``) between resolved handles and paths."""
-    if not file_util.copy(sfs, src, dfs, dst, delete_source, True, conf):
+@dataclass
+class _Copier:
+    """What every copy of one verb shares: both FileSystem handles and
+    the destination parents already checked.  All sources sit under one
+    listed prefix and all destinations under one destination prefix, so
+    each handle is resolved once per verb."""
+
+    sfs: object
+    dfs: object
+    conf: object
+    hadoop: SimpleNamespace
+    parents: set[str] = field(default_factory=set)
+
+
+def _copy(c: _Copier, src: str, dst: str, delete_source: bool) -> None:
+    """One byte copy (``FileUtil.copy``), creating the destination's
+    parent on its first use in the verb."""
+    dp = c.hadoop.Path(dst)
+    parent = dst.rsplit("/", 1)[0]
+    if parent not in c.parents:
+        c.parents.add(parent)
+        jparent = dp.getParent()
+        if not c.dfs.exists(jparent):
+            c.dfs.mkdirs(jparent)  # reference makedirs, download_file.py:261-263
+    src_path = c.hadoop.Path(src)
+    if not c.hadoop.FileUtil.copy(c.sfs, src_path, c.dfs, dp, delete_source, True, c.conf):
         raise S3FileNotFound(f"copy failed: {src} -> {dst}")
 
 
 def _transfer(spark: SparkSession, pairs: list[tuple[str, str]], delete_source: bool) -> None:
     """Copy every (source, destination) pair, deleting each source after
-    its copy when ``delete_source``.  All sources sit under one listed
-    prefix and all destinations under one destination prefix, so each
-    side's FileSystem handle is resolved once per verb, and each
-    distinct destination parent is checked (and created) once.  The
-    Hadoop classes are looked up once too: py4j resolves every segment
-    of ``jvm.org.apache.hadoop.fs.Path`` with its own JVM round trip."""
-    sfs, dfs = _jvm_fs(spark, pairs[0][0]), _jvm_fs(spark, pairs[0][1])
-    conf = spark._jsc.hadoopConfiguration()
-    hadoop = spark._jvm.org.apache.hadoop.fs
-    Path, FileUtil = hadoop.Path, hadoop.FileUtil
-    parents = set()
+    its copy when ``delete_source``."""
+    c = _Copier(
+        sfs=_jvm_fs(spark, pairs[0][0]),
+        dfs=_jvm_fs(spark, pairs[0][1]),
+        conf=spark._jsc.hadoopConfiguration(),
+        hadoop=_hadoop(spark._jvm),
+    )
     for src, dst in pairs:
-        parent = dst.rsplit("/", 1)[0]
-        if parent not in parents:
-            parents.add(parent)
-            jparent = Path(parent)
-            if not dfs.exists(jparent):
-                dfs.mkdirs(jparent)  # reference makedirs, download_file.py:261-263
-        _copy(FileUtil, sfs, Path(src), dfs, Path(dst), delete_source, conf)
+        _copy(c, src, dst, delete_source)
 
 
 def ingest(
@@ -548,7 +587,7 @@ def remove(
     verifies existence first (divergence D7 → typed 201)."""
     paths = _collect_matches(spark, source_url, source_folder, source_file, match_type)
     fs = _jvm_fs(spark, paths[0])  # all matches share one prefix
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    Path = _hadoop(spark._jvm).Path
     for p in paths:
         fs.delete(Path(p), False)
     return VerbResult(files=[(p, None) for p in paths])

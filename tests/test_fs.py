@@ -298,27 +298,20 @@ def test_listing_auto_routes_to_distributed_past_threshold(
     assert distributed == driver
 
 
-def test_python_only_regex_is_typed_203_on_distributed_route(
-    spark, bucket, monkeypatch
-):
-    """Java regex rejects (?P<name>...): past the threshold such a
-    pattern is refused as S3InvalidRegex (203) before any job runs,
-    never as a raw Py4JJavaError; below it, it is plain re.search."""
+def test_python_only_regex_matches_on_distributed_route(spark, bucket, monkeypatch):
+    """Java regex rejects (?P<name>...); both routes match with Python
+    re.search, so such a pattern finds the same files below and past the
+    threshold and never surfaces as a Py4JJavaError."""
     rx = r"(?P<a>data_a)\.csv$"
 
     def collect():
         return fs._collect_matches(spark, url(bucket), "src", rx, fs.REGEX_MATCH)
 
-    assert collect() == [
-        f"file:{bucket}/src/a/data_a.csv",
-        f"file:{bucket}/src/data_a.csv",
-    ]
+    want = [f"file:{bucket}/src/a/data_a.csv", f"file:{bucket}/src/data_a.csv"]
+    assert collect() == want
     monkeypatch.setattr(fs, "DRIVER_LISTING_THRESHOLD", 1)
-    err, jobs = _jobs_run_by(spark, lambda: pytest.raises(S3InvalidRegex, collect))
-    assert (err.value.exit_code, jobs) == (203, 0)
-    listing = fs.list_files(spark, url(bucket / "src"))
-    with pytest.raises(S3InvalidRegex):
-        fs.match_files(listing, rx)
+    distributed, jobs = _jobs_run_by(spark, collect)
+    assert jobs > 0 and distributed == want
 
 
 # Python-only syntax the reference's re.search accepts, plus the
@@ -331,19 +324,21 @@ PATTERN_CORPUS = [
     r"prod-data",
     r"\.csv$",
     r"[.]",
+    r"/\w+\.csv$",  # Unicode \w in Python, ASCII in Java regex
 ]
 
 
 def test_driver_route_matches_equal_re_search(spark, tmp_path):
-    """Driver-route matching is exactly re.search over the
-    store-relative key: on a local tree through _collect_matches, and
-    on s3a-style keys (bucket-relative, so ^data/ hits and the bucket
-    name prod-data never does) through match_paths."""
+    """Matching is exactly re.search over the store-relative key on
+    both routes: on a local tree through _collect_matches (driver) and
+    match_files over the distributed listing, and on s3a-style keys
+    (bucket-relative, so ^data/ hits and the bucket name prod-data never
+    does) through match_paths."""
     root = tmp_path / "corpus"
     for rel in (
         "logs/app.1.log", "logs/app.22.log", "logs/app.log", "logs/xapp.3.log.gz",
         "aa.txt", "ab.txt", "nested/bb.txt", "data/x.csv", "other/data/y.csv",
-        "prod-data/z.json",
+        "prod-data/z.json", "données.csv",
     ):
         (root / rel).parent.mkdir(parents=True, exist_ok=True)
         (root / rel).write_text("x")
@@ -357,6 +352,8 @@ def test_driver_route_matches_equal_re_search(spark, tmp_path):
         "s3a://prod-data-bucket/cc.txt": "cc.txt",
         "s3a://b/prod-data/k.csv": "prod-data/k.csv",
     }
+    # one task per match job: the file index splits 11 files many ways
+    distributed = fs.list_files_distributed(spark, url(root)).coalesce(1)
     hits = {}
     for rx in PATTERN_CORPUS:
         want = sorted(f"file:{p}" for p in local if re.search(rx, p))
@@ -365,6 +362,8 @@ def test_driver_route_matches_equal_re_search(spark, tmp_path):
         except S3NoMatches:
             got = []
         assert got == want, rx
+        matched = fs.match_files(distributed, rx).select("path").collect()
+        assert sorted(r.path for r in matched) == want, rx
         want_s3a = sorted(p for p, key in s3a_keys.items() if re.search(rx, key))
         assert fs.match_paths(s3a_keys, rx) == want_s3a, rx
         hits[rx] = (len(got), len(want_s3a))
@@ -373,6 +372,7 @@ def test_driver_route_matches_equal_re_search(spark, tmp_path):
     assert hits[PATTERN_CORPUS[2]] == (2, 1)  # the key data/x.csv has no "/data/"
     assert hits[r"^data/"] == (0, 1)
     assert hits[r"prod-data"] == (1, 1)  # only the folder, never the bucket
+    assert hits[PATTERN_CORPUS[-1]] == (3, 3)  # données.csv too
 
 
 def test_regex_ingest_below_threshold_runs_no_spark_job(spark, bucket, tmp_path):
